@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import java.nio.file.{Files, Paths}
+
 /** K-nearest-neighbors classifier — the reference's ML core
   * (KNeighborsClassifier k=5, reference processor.py:128-129; UDF serving
   * processor.py:228-258). Design per SURVEY.md §7.3: the model IS the
@@ -54,8 +56,24 @@ object Knn {
     * ([[predictShuffled]]) instead of OOMing the executors on an
     * oversized broadcast.
     */
-  def predictDistributed(queries: DataFrame, refs: DataFrame, k: Int): DataFrame = {
-    val maxBc = queries.sparkSession.conf
+  def predictDistributed(queries: DataFrame, refs: DataFrame, k: Int): DataFrame =
+    voteTopK(scoredPairs(queries, refs, Seq("qid")), Seq("qid"), k)
+
+  /** Distance rows (keys…, rid, label, dist) for the vote stage: the
+    * reference side is broadcast while it fits under
+    * spark.graft.knn.maxBroadcastRows, else scored by the block-nested
+    * shuffle join. `keys` are carried from either side. */
+  private def scoredPairs(queries: DataFrame, refs: DataFrame,
+      keys: Seq[String]): DataFrame =
+    if (overBroadcastCap(refs)) shuffledPairs(queries, refs, keys, 0)
+    else queries.crossJoin(broadcast(refs)).select(scoreCols(keys): _*)
+
+  private def scoreCols(keys: Seq[String]): Seq[Column] =
+    keys.map(col) ++ Seq(col("rid"), col("label"),
+      sqDist(col("qvec"), col("rvec")).as("dist"))
+
+  private def overBroadcastCap(refs: DataFrame): Boolean = {
+    val maxBc = refs.sparkSession.conf
       .getOption("spark.graft.knn.maxBroadcastRows")
       .map(_.toLong).getOrElse(2000000L)
     // strategy pick, cheapest evidence first: Catalyst's own stats are
@@ -72,7 +90,7 @@ object Knn {
     // limit(cap+1) short-circuits that count once the cap is exceeded
     // instead of scanning the whole reference set.
     val stats = refs.queryExecution.optimizedPlan.stats
-    val overCap = stats.rowCount match {
+    stats.rowCount match {
       case Some(n) => n > maxBc
       case None =>
         if (stats.sizeInBytes <= maxBc) false // = 8x-compressed 8B rows
@@ -81,12 +99,6 @@ object Knn {
           refs.limit(capProbe + 1).count() > maxBc
         }
     }
-    if (overCap) predictShuffled(queries, refs, k)
-    else voteTopK(
-      queries.crossJoin(broadcast(refs))
-        .select(col("qid"), col("rid"), col("label"),
-          sqDist(col("qvec"), col("rvec")).as("dist")),
-      k)
   }
 
   /** EXACT non-broadcast predict — the block-nested join as a shuffle:
@@ -101,20 +113,21 @@ object Knn {
     * every (query, ref) pair exactly once.
     */
   def predictShuffled(queries: DataFrame, refs: DataFrame, k: Int,
-      blocks: Int = 0): DataFrame = {
-    val spark = queries.sparkSession
+      blocks: Int = 0): DataFrame =
+    voteTopK(shuffledPairs(queries, refs, Seq("qid"), blocks), Seq("qid"), k)
+
+  private def shuffledPairs(queries: DataFrame, refs: DataFrame,
+      keys: Seq[String], blocks: Int): DataFrame = {
     val b = if (blocks > 0) blocks
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
+      else queries.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val refB = refs.withColumn("blk", pmod(hash(col("rid")), lit(b)))
-    val qB = queries.select(col("qid"), col("qvec"),
-      explode(array((0 until b).map(lit(_)): _*)).as("blk"))
-    val scored = qB.join(refB.hint("shuffle_hash"), "blk")
-      .select(col("qid"), col("rid"), col("label"),
-        sqDist(col("qvec"), col("rvec")).as("dist"))
-    voteTopK(scored, k)
+    val qKeys = keys.filter(queries.columns.contains)
+    val qB = queries.select((qKeys :+ "qvec").map(col) :+
+      explode(array((0 until b).map(lit(_)): _*)).as("blk"): _*)
+    qB.join(refB.hint("shuffle_hash"), "blk").select(scoreCols(keys): _*)
   }
 
-  /** Shared vote stage: scored (qid, rid, label, dist) → (qid,
+  /** Shared vote stage: scored (keys…, rid, label, dist) → (keys…,
     * pred_label) via bounded-heap top-k + majority vote, ties
     * (count desc, label asc). The vote happens INSIDE the aggregated
     * row: the heap already delivered the k neighbor labels as one
@@ -122,19 +135,53 @@ object Knn {
     * query — the former explode → re-groupBy → window form paid two
     * extra shuffles and a per-query sort to recount an array this
     * stage already held whole. One shuffle total (the top-k partial
-    * aggregation), at any scale. */
-  private def voteTopK(scored: DataFrame, k: Int): DataFrame =
+    * aggregation), at any scale. `ownK`, an expression over the keys,
+    * cuts each group's ascending neighbour list to a smaller k than
+    * the heap's. */
+  private def voteTopK(scored: DataFrame, keys: Seq[String], k: Int,
+      ownK: Option[Column] = None): DataFrame = {
+    val top = graft.functions.TopK.smallestK(
+      col("dist"), col("rid"), col("label"), k)
     scored
-      .groupBy("qid")
-      .agg(graft.functions.TopK.smallestK(
-        col("dist"), col("rid"), col("label"), k).as("nbrs"))
+      .groupBy(keys.map(col): _*)
+      .agg(ownK.fold(top)(n => slice(top, lit(1), n)).as("nbrs"))
       // max over (count, -label) structs = (count desc, label asc)
-      .select(col("qid"),
+      .select(keys.map(col) :+
         (-array_max(transform(array_distinct(col("nbrs.label")),
           l => struct(
             size(filter(col("nbrs.label"), x => x === l)).as("c"),
             (-l).as("nl"))))
-          .getField("nl")).as("pred_label"))
+          .getField("nl")).as("pred_label"): _*)
+  }
+
+  /** Champion-challenger scoring in ONE query: `(correct, total)` per
+    * model, in `models` order, each model voting with its own k over
+    * the same queries (qid, qvec, true_label). The models' reference
+    * sets are tagged with their index and unioned, so one broadcast (or
+    * one block-nested shuffle past the cap) scores them all; the heap
+    * keeps the largest k and each group's list is cut to its model's k.
+    * `true_label` rides in the group key, so no join back to the
+    * queries re-reads them and a nondeterministic qid stays consistent
+    * within the one scan. A model with no references scores (0, 0). */
+  def scoreModels(queries: DataFrame,
+      models: Seq[(DataFrame, Int)]): Seq[(Long, Long)] = {
+    require(models.nonEmpty, "scoreModels: no models to score")
+    val ks = models.map(_._2)
+    val refs = models.zipWithIndex.map { case ((r, _), m) =>
+      r.select(lit(m).as("model"), col("rid"), col("rvec"), col("label"))
+    }.reduce(_ union _)
+    val keys = Seq("model", "qid", "true_label")
+    // the per-query work is |R| distances: spread a small-split query
+    // scan across the cores (identity at cluster scale)
+    val q = Tables.spread(queries.select("qid", "qvec", "true_label"))
+    val counts = voteTopK(scoredPairs(q, refs, keys), keys, ks.max,
+        Some(element_at(typedLit(ks), col("model") + 1)))
+      .groupBy("model")
+      .agg(sum((col("pred_label") === col("true_label")).cast(LongType)),
+        count(lit(1)))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    ks.indices.map(counts.getOrElse(_, (0L, 0L)))
+  }
 
   /** Pivot-pruned EXACT predict (REPOSE-style reference-point pruning,
     * SURVEY.md §7.3): the 100 TB form of the brute-force crossJoin.
@@ -290,7 +337,7 @@ object Knn {
       .filter(lb * lb <= col("dk_sq"))
       .select(col("qid"), col("rid"), col("label"),
         sqDist(col("qvec"), col("rvec")).as("dist"))
-    voteTopK(scored, k)
+    voteTopK(scored, Seq("qid"), k)
   }
 
   /** The window full-sort form (the v1 plan) — kept as the equivalence
@@ -407,22 +454,31 @@ object Knn {
       refs: Array[Ref], k: Int): Unit =
     spark.udf.register(name, udf(predictFn(spark, refs, k))): Unit
 
-  /** Persist a trained model: reference set parquet + metadata — the
-    * reference's joblib.dump + register_model_version
-    * (processor.py:131-138), file-backed.
+  /** Persist a trained model: reference set parquet + its schema +
+    * metadata — the reference's joblib.dump + register_model_version
+    * (processor.py:131-138), file-backed. `schema.json` lets [[load]]
+    * skip parquet's footer-inference job.
     */
   def save(refs: DataFrame, dir: String, k: Int): Unit = {
     Work.clean(dir)
     refs.write.mode("overwrite").parquet(s"$dir/refs")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/meta.json"), s"""{"k":$k}""")
+    Files.writeString(Paths.get(s"$dir/schema.json"), refs.schema.json)
+    Files.writeString(Paths.get(s"$dir/meta.json"), s"""{"k":$k}""")
   }
 
+  /** Load a model dir written by [[save]]: no Spark job when it records
+    * its schema; a dir without `schema.json` loads by inference. */
   def load(spark: SparkSession, dir: String): (DataFrame, Int) = {
-    val meta = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$dir/meta.json"))
-    val k = "\"k\":(\\d+)".r.findFirstMatchIn(meta).get.group(1).toInt
-    (spark.read.parquet(s"$dir/refs"), k)
+    val meta = Files.readString(Paths.get(s"$dir/meta.json"))
+    val k = "\"k\":(\\d+)".r.findFirstMatchIn(meta).getOrElse(
+      throw new IllegalArgumentException(
+        s"model dir $dir: meta.json has no \"k\" entry: $meta")).group(1).toInt
+    val schemaFile = Paths.get(s"$dir/schema.json")
+    val reader =
+      if (!Files.exists(schemaFile)) spark.read
+      else spark.read.schema(
+        DataType.fromJson(Files.readString(schemaFile)).asInstanceOf[StructType])
+    (reader.parquet(s"$dir/refs"), k)
   }
 
   // --- embeddings-table split shared by queries and oracle ------------

@@ -96,21 +96,22 @@ object Processors {
       val reg = ctx.registry
       val model = ctx.config("model")
       val deployed = reg.getDeployedModelVersion(model)
-      val latest = reg.getLatestGeneratedModelVersion(model).get
+      val latest = reg.getLatestGeneratedModelVersion(model).getOrElse(
+        sys.error(s"no GENERATED version of model '$model' to validate"))
       deployed match {
         case None =>
           reg.updateModelVersionStage(model, latest.version, Stage.Validated)
           reg.updateModelVersionStage(model, latest.version, Stage.Deployed)
           ()
         case Some(dep) =>
-          // materialize: qid is monotonically_increasing_id — freeze the
-          // assignment once so the prediction join cannot mis-align
-          val validation = Work.materialize("wf_validation",
-            BatchTrainPredict.asQueries(inputs.head))
-          val (newRefs, k1) = Knn.load(ctx.spark, latest.path)
-          val newScore = BatchTrainPredict.accuracy(validation, newRefs, k1)
-          val (depRefs, k2) = Knn.load(ctx.spark, dep.path)
-          val depScore = BatchTrainPredict.accuracy(validation, depRefs, k2)
+          // both models scored in one query (Knn.scoreModels): one scan
+          // of the validation set, so its monotonically_increasing_id qid
+          // needs no freezing
+          val Seq(newScore, depScore) = Knn.scoreModels(
+            BatchTrainPredict.asQueries(inputs.head),
+            Seq(Knn.load(ctx.spark, latest.path), Knn.load(ctx.spark, dep.path)))
+            // empty validation set: score 0, not a division by zero
+            .map { case (c, n) => if (n == 0L) 0.0 else c.toDouble / n }
           reg.appendToArtifact(artifactName,
             s"deployed model version: ${dep.version} scores: $depScore")
           reg.appendToArtifact(artifactName,

@@ -1,7 +1,10 @@
 package graft
 
 import graft.ml.Knn
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import java.nio.file.{Files, Paths}
 
 class KnnSpec extends SparkSpec {
 
@@ -57,6 +60,71 @@ class KnnSpec extends SparkSpec {
     val (loaded, k) = Knn.load(spark, dir)
     assert(k == 7)
     assert(loaded.count() == refs.count())
+  }
+
+  test("model load reads the recorded schema in zero jobs; a dir without schema.json loads the same rows") {
+    val (_, refs) = Knn.split(spark, sf)
+    val dir = s"${Work.dir}/test_knn_schema"
+    Knn.save(refs, dir, k = 5)
+    val ((recorded, _), jobs) = jobsDuring(Knn.load(spark, dir))
+    assert(jobs == 0, s"load with schema.json started $jobs Spark jobs")
+    // the layout written before schema.json existed: inference still works
+    Files.delete(Paths.get(s"$dir/schema.json"))
+    val ((inferred, k), inferJobs) = jobsDuring(Knn.load(spark, dir))
+    assert(inferJobs >= 1, "footer inference runs as a Spark job")
+    assert(k == 5)
+    assert(recorded.schema == inferred.schema)
+    def rows(df: DataFrame) = df.collect().sortBy(_.getLong(0)).toSeq
+    assert(rows(recorded) == rows(inferred))
+  }
+
+  test("model load names the model dir when meta.json has no k") {
+    val dir = s"${Work.dir}/test_knn_badmeta"
+    Work.clean(dir)
+    Files.createDirectories(Paths.get(dir))
+    Files.writeString(Paths.get(s"$dir/meta.json"), "{}")
+    val e = intercept[IllegalArgumentException](Knn.load(spark, dir))
+    assert(e.getMessage.contains(dir), e.getMessage)
+  }
+
+  test("scoreModels: one query gives each model's own predictDistributed counts, under and past the broadcast cap") {
+    val (q, r) = Knn.split(spark, sf)
+    // challenger: half the references, labels shifted, voting with k=3
+    val challenger = r.filter(col("rid") % 2 === 0)
+      .withColumn("label", (col("label") + 1) % 10)
+    val models = Seq(r -> 5, challenger -> 3)
+    val truth = q.select("qid", "true_label").collect()
+      .map(x => x.getLong(0) -> x.getInt(1)).toMap
+    val want = models.map { case (refs, k) =>
+      val preds = Knn.predictDistributed(q, refs, k).collect()
+      (preds.count(p => truth(p.getLong(0)) == p.getInt(1)).toLong,
+        preds.length.toLong)
+    }
+    assert(want.map(_._2) == Seq(truth.size.toLong, truth.size.toLong))
+    assert(want(0) != want(1), "the two models must be told apart")
+    assert(Knn.scoreModels(q, models) == want)
+
+    // a forced 1-row cap routes the union through the shuffle path
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString): Unit
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.conf.set("spark.graft.knn.maxBroadcastRows", "1")
+    spark.listenerManager.register(ql)
+    try {
+      assert(Knn.scoreModels(q, models) == want)
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      assert(!plans.isEmpty)
+      plans.forEach(p => assert(!p.contains("BroadcastExchange"), p))
+    } finally {
+      spark.listenerManager.unregister(ql)
+      spark.conf.unset("spark.graft.knn.maxBroadcastRows")
+    }
   }
 
   test("knn_score counts agree with recomputed prediction correctness") {

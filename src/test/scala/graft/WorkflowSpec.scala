@@ -9,21 +9,48 @@ import java.nio.file.{Files, Paths}
 
 class WorkflowSpec extends SparkSpec {
 
+  /** Iris-shaped rows from the embeddings table: 4 leading dims, 3 labels. */
+  private def irisRows = Tables(spark, sf, "embeddings").select(
+    element_at(col("embedding"), 1).cast(FloatType).as("sl"),
+    element_at(col("embedding"), 2).cast(FloatType).as("sw"),
+    element_at(col("embedding"), 3).cast(FloatType).as("pl"),
+    element_at(col("embedding"), 4).cast(FloatType).as("pw"),
+    (col("label") % 3).cast(FloatType).as("type"),
+    col("vec_id"))
+
   private def mkFixtures(base: String): BTP.Config = {
     Work.clean(base)
-    val emb = Tables(spark, sf, "embeddings").select(
-      element_at(col("embedding"), 1).cast(FloatType).as("sl"),
-      element_at(col("embedding"), 2).cast(FloatType).as("sw"),
-      element_at(col("embedding"), 3).cast(FloatType).as("pl"),
-      element_at(col("embedding"), 4).cast(FloatType).as("pw"),
-      (col("label") % 3).cast(FloatType).as("type"),
-      col("vec_id"))
+    val emb = irisRows
     emb.filter(col("vec_id") % 5 =!= 0).drop("vec_id")
       .write.mode("overwrite").csv(s"$base/train_csv")
     emb.filter(col("vec_id") % 5 === 0).drop("vec_id")
       .write.mode("overwrite").csv(s"$base/test_csv")
     BTP.Config(s"$base/train_csv", s"$base/test_csv", s"$base/wf")
   }
+
+  /** Driver-side k-NN accuracy of a saved model on the test CSV:
+    * neighbours by (distance, rid), votes by (count desc, label asc). */
+  private def bruteForceAccuracy(modelDir: String, testCsv: String): Double = {
+    val (refsDf, k) = graft.ml.Knn.load(spark, modelDir)
+    val refs = refsDf.collect().map(r =>
+      (r.getLong(0), r.getSeq[Double](1).toArray, r.getInt(2)))
+    val tests = BTP.csvScan(spark, testCsv).collect().map(r =>
+      (Array.tabulate(4)(i => r.getFloat(i).toDouble), r.getFloat(4).toInt))
+    val correct = tests.count { case (q, y) =>
+      val top = refs.map { case (rid, v, label) =>
+        var s = 0.0
+        var i = 0
+        while (i < v.length) { val d = q(i) - v(i); s += d * d; i += 1 }
+        (s, rid, label)
+      }.sortBy(t => (t._1, t._2)).take(k)
+      top.groupBy(_._3).toSeq.map { case (l, n) => (-n.size, l) }.min._2 == y
+    }
+    correct.toDouble / tests.length
+  }
+
+  private def validationScratch(): Set[String] =
+    Option(new java.io.File(Work.dir).list()).toSet.flatten
+      .filter(_.startsWith("mat_wf_validation_"))
 
   test("golden run: all four jobs cascade; one version ends DEPLOYED") {
     val cfg = mkFixtures(s"${Work.dir}/test_wf_golden")
@@ -57,6 +84,57 @@ class WorkflowSpec extends SparkSpec {
     assert(artifact.linesIterator.size == 2)
     assert(artifact.contains("deployed model version: 1"))
     assert(artifact.contains("generated model version: 2"))
+  }
+
+  test("challenger loses: v1 stays DEPLOYED, v2 GENERATED, predict skipped") {
+    val base = s"${Work.dir}/test_wf_lose"
+    val cfg = mkFixtures(base)
+    BTP.runOnce(spark, cfg)
+    // second execution trains on label-permuted rows: a worse model
+    irisRows.filter(col("vec_id") % 5 =!= 0)
+      .select(col("sl"), col("sw"), col("pl"), col("pw"),
+        ((col("type") + 1) % 3).cast(FloatType).as("type"))
+      .write.mode("overwrite").csv(s"$base/train_permuted_csv")
+    val wf2 = BTP.runOnce(spark, cfg.copy(trainCsv = s"$base/train_permuted_csv"))
+    val versions = wf2.registry.modelVersions(cfg.modelName)
+    assert(versions.map(v => v.version -> v.stage) ==
+      Seq(1 -> Stage.Deployed, 2 -> Stage.Generated))
+    assert(!wf2.ranJobs.contains("predict"), s"ran ${wf2.ranJobs}")
+    // both scores are exact k-vote accuracies of each model
+    val Seq(v1, v2) = versions.map(v => bruteForceAccuracy(v.path, cfg.testCsv))
+    assert(v2 < v1, s"permuted model must lose: $v2 vs $v1")
+    val artifact = Files.readString(
+      Paths.get(s"${cfg.workdir}/${cfg.artifactName}.txt"))
+    assert(artifact.linesIterator.toSeq == Seq(
+      s"deployed model version: 1 scores: $v1",
+      s"generated model version: 2 scores: $v2"))
+  }
+
+  test("champion-challenger validate runs one scoring query: at most 6 jobs, no scratch left") {
+    val cfg = mkFixtures(s"${Work.dir}/test_wf_jobs")
+    BTP.runOnce(spark, cfg)
+    val wf = new graft.workflow.Workflow(spark, cfg.workdir)
+    val jobs = new JobCounter
+    // subscribed before build(): each handler runs before the job its
+    // event starts, so the two reads bracket validate exactly
+    var start, end = -1
+    wf.bus.subscribe(Events.ModelGenerated)(_ => start = jobs.read())
+    wf.bus.subscribe(Events.ModelValidated)(_ => end = jobs.read())
+    BTP.build(wf, cfg)
+    val scratchBefore = validationScratch()
+    try wf.run(Seq("datagen")) finally jobs.close()
+    assert(start >= 0 && end >= start, s"validate not bracketed: $start, $end")
+    assert(end - start <= 6, s"validate ran ${end - start} Spark jobs")
+    assert(validationScratch() -- scratchBefore == Set.empty)
+  }
+
+  test("validate names the model when it has no GENERATED version") {
+    val cfg = mkFixtures(s"${Work.dir}/test_wf_nogen")
+    val wf = new graft.workflow.Workflow(spark, cfg.workdir)
+    BTP.build(wf, cfg)
+    val e = intercept[RuntimeException](
+      wf.bus.publish(Events.ModelGenerated, cfg.modelName))
+    assert(e.getMessage.contains(s"'${cfg.modelName}'"), e.getMessage)
   }
 
   test("predict fires only after DEPLOYED despite VALIDATED firing first") {
