@@ -212,23 +212,12 @@ object Bench {
     // Per-run observability (round-6 verdict #1: the 26 s gate median
     // for dedup_ngram_jaccard was unexplainable from a medians-only
     // artifact). Each run records wall seconds, exact Spark job/stage/
-    // task counts (listener bus drained before reading — see
-    // ListenerBridge), cumulative JVM GC ms during the run, the run's
+    // task counts (ops.JobStats, which drains the listener bus before
+    // each read), cumulative JVM GC ms during the run, the run's
     // start offset from bench start, and which suite pass it belongs
     // to, so one stuck run, GC decay with session age, or a job-count
     // blowup are distinguishable in the committed artifact.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(): Unit
-          stages.addAndGet(j.stageInfos.size): Unit
-          tasks.addAndGet(j.stageInfos.map(_.numTasks).sum): Unit
-        }
-      })
+    val jobStats = graft.ops.JobStats.install(spark)
     def gcMs(): Long =
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).sum
@@ -246,13 +235,10 @@ object Bench {
         fn: (org.apache.spark.sql.SparkSession, String) =>
           org.apache.spark.sql.DataFrame,
         pass: Int): Unit = {
-      org.apache.spark.sql.graftbridge.ListenerBridge
-        .drain(spark.sparkContext)
       // per-key conf policy: tuning confs reset per key, whole-plan
-      // rewrites ambient-ON by default since r15 (SOAK_r14-adjudicated;
-      // SPARK_GRAFT_RULES_ON=0 reverts to the old scoped posture)
+      // rewrites ambient-ON (SOAK_r14-adjudicated, since r15)
       GraftSession.applyQueryConfPolicy(spark)
-      val (j0, s0, k0, g0) = (jobs.get(), stages.get(), tasks.get(), gcMs())
+      val (c0, g0) = (jobStats.read(), gcMs())
       val at = (System.nanoTime() - benchT0) / 1e9
       val t0 = System.nanoTime()
       // Timed action is a noop-sink WRITE, not count(): under a count,
@@ -275,12 +261,10 @@ object Bench {
       val sec = (System.nanoTime() - t0) / 1e9
       // each run measured cold-cache, like an isolated run
       GraftSession.dropAllCaches(spark)
-      org.apache.spark.sql.graftbridge.ListenerBridge
-        .drain(spark.sparkContext)
+      val c = jobStats.read() - c0
       if (ok) {
-        recs(name) += Run(sec, jobs.get - j0, stages.get - s0,
-          tasks.get - k0, gcMs() - g0, at, pass,
-          isSuspect(sec, ref.get(name)))
+        recs(name) += Run(sec, c.jobs, c.stages, c.tasks, gcMs() - g0, at,
+          pass, isSuspect(sec, ref.get(name)))
         (): Unit
       }
     }

@@ -469,17 +469,33 @@ object Work {
   }
 
   /** Read a small control record (`dir/name`) whole; None when absent
-    * or vanishing mid-read (the same thing, for these). */
+    * or vanishing mid-read (the same thing, for these).
+    *
+    * A checksummed store (the local filesystem) renames and deletes a
+    * record's data file and its `.crc` sidecar in two steps, so a read
+    * racing a concurrent create / replace / delete can pair one
+    * record's bytes with another's checksum. That torn pair is
+    * transient: a checksum failure is re-read for up to a second
+    * before it propagates as corruption. */
   def readSmallRecord(dir: String, name: String): Option[String] = {
     val (f, d) = fs(dir)
     val p = new org.apache.hadoop.fs.Path(d, name)
-    if (!f.exists(p)) None
-    else
-      try {
-        val in = f.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => None }
+    val deadline = System.nanoTime() + 1000000000L
+    def read(): Option[String] =
+      if (!f.exists(p)) None
+      else
+        try {
+          val in = f.open(p)
+          try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+          finally in.close()
+        } catch {
+          case _: java.io.FileNotFoundException => None
+          case _: org.apache.hadoop.fs.ChecksumException
+              if System.nanoTime() < deadline =>
+            Thread.sleep(20L)
+            read()
+        }
+    read()
   }
 
   /** Replace a small control record atomically: unique tmp +

@@ -27,7 +27,7 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       // per-key conf policy: tuning confs reset per key, rewrites
-      // ambient-ON by default since r15 (SPARK_GRAFT_RULES_ON=0 reverts)
+      // ambient-ON since r15
       GraftSession.applyQueryConfPolicy(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -325,7 +325,7 @@ object Dedup {
 
   /** Exact Jaccard verification of candidate (a, b) id pairs against
     * the full shingle sets — the shared tail of the prefix and
-    * MinHash-LSH paths (and what ProfileNgram times). Shape: chained
+    * MinHash-LSH paths. Shape: chained
     * candidate ⋈ sets_a ⋈ sets_b. The r13 profile also MEASURED the
     * two-fetch alternative (va = cands ⋈ sets_a, vb = cands ⋈ sets_b,
     * merge on (a,b)): +3 jobs and no wall win, and at scale it only
@@ -350,7 +350,7 @@ object Dedup {
     * ids resolve against `shA` only and the `b` ids against `shB` only.
     * For the self-join case both sides are the same frame
     * ([[verifyJaccard]]); for the cross-corpus incremental case the
-    * split is the r16 measured cut (ProfileIncPub, sf0.1, candidates
+    * split is the r16 measured cut (sf0.1, candidates
     * persisted so the arms time ONLY the verify join: 0.37 s warm vs
     * 0.75 s for joining both ids against the history-sized union —
     * history is scanned once instead of twice, and the `b` side is
@@ -949,16 +949,13 @@ object Dedup {
       .toDF(("doc_id" +: extras) ++ Seq("band", "bucket"): _*)
   }
 
-  /** LSH candidate pairs: equal band-bucket for any of the 16 bands of 4
-    * signature rows. One shuffle on (band, bucket). NOTE for hot-path
+  /** LSH candidate pairs over [[bandBuckets]] rows: equal band-bucket
+    * for any band. One shuffle on (band, bucket). NOTE for hot-path
     * callers: the self-join BROADCASTS one side when small, defeating
     * ReuseExchange — an unpersisted bucket frame recomputes the 64-hash
     * signature UDF per side ([[minhashDedup]] persists; same finding as
     * the r13 prefix-index fix, and the same reason the simhash/media
     * pair keys materialize their signatures first). */
-  def lshCandidates(sigs: DataFrame): DataFrame =
-    lshCandidatesOn(bandBuckets(sigs))
-
   private[graft] def lshCandidatesOn(buckets: DataFrame): DataFrame = {
     buckets.alias("x").join(buckets.alias("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
@@ -979,7 +976,7 @@ object Dedup {
     shingled.count(): Unit
     // persist the banded buckets: the candidate self-join broadcasts
     // one side when small, so without the cache the 64-hash signature
-    // UDF runs once per side (r13; see lshCandidates scaladoc)
+    // UDF runs once per side (r13; see lshCandidatesOn scaladoc)
     val buckets = bandBuckets(minhashSignatures(shingled)).persist()
     buckets.count(): Unit
     val result = verifyJaccard(lshCandidatesOn(buckets), shingled)
@@ -1081,7 +1078,7 @@ object Dedup {
   private def incrementalFromTagged(tagged: DataFrame): DataFrame = {
     val sh = tagged.persist()
     sh.count(): Unit
-    // the banded sides are NOT persisted: unlike lshCandidates' SELF
+    // the banded sides are NOT persisted: unlike lshCandidatesOn's SELF
     // join (one frame feeding both sides), each has exactly one
     // consumer — its side of the cross-side join — so the 64-hash
     // signature UDF runs once per side straight off the cached
@@ -2641,7 +2638,7 @@ object Dedup {
         b.count(): Unit
         b
       } else bandBuckets(minhashSignatures(shI))
-    // split verify (r16, ProfileIncPub-measured): `a` ids are history
+    // split verify (r16, measured at sf0.1): `a` ids are history
     // ids and `b` ids increment ids, so each side joins only its own
     // shingle frame — the stored history table is scanned once instead
     // of twice (the union spelling resolved BOTH ids against

@@ -1,7 +1,9 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -92,6 +94,100 @@ object GraftMetrics {
 
   def uninstall(spark: SparkSession, m: GraftMetrics): Unit =
     spark.listenerManager.unregister(m)
+}
+
+/** Spark jobs, stages and tasks started on a session, in total and per
+  * phase. The phase is what a job's reader would call it: its
+  * `spark.job.description` when set, else its short call site. */
+final case class JobCounts(jobs: Int, stages: Int, tasks: Int,
+    phases: Map[String, Int]) {
+
+  /** The counts started since `before` (a read of the same listener);
+    * phases without a new job are dropped. */
+  def -(before: JobCounts): JobCounts =
+    JobCounts(jobs - before.jobs, stages - before.stages,
+      tasks - before.tasks,
+      phases.map { case (p, n) => p -> (n - before.phases.getOrElse(p, 0)) }
+        .filter(_._2 > 0))
+}
+
+/** THE job counter: the one `SparkListener` behind every job, stage and
+  * task count in graft (Bench's per-run detail, StressMain's growth
+  * rows, `graft.Profile`, the job-count pins in the tests). Counts are
+  * taken at job start, so a job's stages include any it skips on reused
+  * shuffle output, as Spark's own UI counts them.
+  *
+  * The scheduler posts job events asynchronously; [[read]] drains the
+  * listener bus first, so a read right after an action includes every
+  * job that action started.
+  *
+  * {{{
+  *   val (out, counts) = JobStats.during(spark)(df.count())
+  *   counts.phases.foreach(println)   // jobs per named phase
+  * }}}
+  */
+final class JobStats private (spark: SparkSession) extends SparkListener {
+
+  private val jobs = new AtomicInteger
+  private val stages = new AtomicInteger
+  private val tasks = new AtomicInteger
+  private val byPhase = new ConcurrentHashMap[String, AtomicInteger]
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = {
+    jobs.incrementAndGet(): Unit
+    stages.addAndGet(j.stageInfos.size): Unit
+    tasks.addAndGet(j.stageInfos.map(_.numTasks).sum): Unit
+    byPhase.computeIfAbsent(JobStats.phaseOf(j.properties),
+      _ => new AtomicInteger).incrementAndGet(): Unit
+  }
+
+  /** Everything counted since [[JobStats.install]]. */
+  def read(): JobCounts = {
+    org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+    JobCounts(jobs.get, stages.get, tasks.get,
+      byPhase.asScala.map { case (p, n) => p -> n.get }.toMap)
+  }
+
+  /** Stop counting. Drains first, so every job started before the call
+    * is counted and none started after it. */
+  def close(): Unit = {
+    org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(this)
+  }
+}
+
+object JobStats {
+  /** Install a fresh counter on the session's SparkContext. */
+  def install(spark: SparkSession): JobStats = {
+    val s = new JobStats(spark)
+    spark.sparkContext.addSparkListener(s)
+    s
+  }
+
+  /** `body`'s value and the jobs it started. */
+  def during[T](spark: SparkSession)(body: => T): (T, JobCounts) = {
+    val s = install(spark)
+    try {
+      val before = s.read()
+      val out = body
+      (out, s.read() - before)
+    } finally s.close()
+  }
+
+  /** A job's phase: its description, else its short call site. The
+    * streaming engine describes every micro-batch job `… batch = N`, so
+    * those are bucketed as `[stream-machinery]` by call site instead of
+    * one row per batch. Whitespace is collapsed and the name capped at
+    * 110 chars so a multi-line description stays one histogram row. */
+  def phaseOf(props: java.util.Properties): String = {
+    def prop(k: String) = Option(props).flatMap(p => Option(p.getProperty(k)))
+    val site = prop("callSite.short").getOrElse("?")
+    (prop("spark.job.description") match {
+      case Some(d) if d.contains("batch = ") => s"[stream-machinery] $site"
+      case Some(d) => d
+      case None => site
+    }).replaceAll("\\s+", " ").take(110)
+  }
 }
 
 /** One micro-batch's progress snapshot. */

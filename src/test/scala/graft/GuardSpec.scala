@@ -1305,6 +1305,31 @@ class GuardSpec extends SparkSpec {
     Work.clean(dir)
   }
 
+  test("small-record read re-reads a data / checksum pair torn by a " +
+      "concurrent replace, and still fails on lasting corruption") {
+    import java.nio.file.{Files, Paths}
+    val dir = Work.scratch("torn_record")
+    Work.clean(dir)
+    val crc = Paths.get(dir, "._lk.crc")
+    Work.replaceSmallRecord(dir, "_lk", "old")
+    val oldCrc = Files.readAllBytes(crc)
+    Work.replaceSmallRecord(dir, "_lk", "new")
+    val newCrc = Files.readAllBytes(crc)
+    // the torn pair a racing rename leaves: new bytes, old checksum
+    Files.write(crc, oldCrc)
+    val writer = new Thread(() => {
+      Thread.sleep(50L)
+      Files.write(crc, newCrc): Unit
+    })
+    writer.start()
+    try assert(Work.readSmallRecord(dir, "_lk").contains("new"))
+    finally writer.join()
+    Files.write(crc, oldCrc)
+    intercept[org.apache.hadoop.fs.ChecksumException](
+      Work.readSmallRecord(dir, "_lk"))
+    Work.clean(dir)
+  }
+
   test("put-commit refuses to publish a marker past the watermark " +
       "grace: staged bytes stay INVISIBLE instead of silently skipped " +
       "(r19 ADVICE)") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ml.Knn
+import graft.ops.JobStats
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -66,12 +67,12 @@ class KnnSpec extends SparkSpec {
     val (_, refs) = Knn.split(spark, sf)
     val dir = s"${Work.dir}/test_knn_schema"
     Knn.save(refs, dir, k = 5)
-    val ((recorded, _), jobs) = jobsDuring(Knn.load(spark, dir))
-    assert(jobs == 0, s"load with schema.json started $jobs Spark jobs")
+    val ((recorded, _), c) = JobStats.during(spark)(Knn.load(spark, dir))
+    assert(c.jobs == 0, s"load with schema.json started ${c.jobs} Spark jobs")
     // the layout written before schema.json existed: inference still works
     Files.delete(Paths.get(s"$dir/schema.json"))
-    val ((inferred, k), inferJobs) = jobsDuring(Knn.load(spark, dir))
-    assert(inferJobs >= 1, "footer inference runs as a Spark job")
+    val ((inferred, k), inferC) = JobStats.during(spark)(Knn.load(spark, dir))
+    assert(inferC.jobs >= 1, "footer inference runs as a Spark job")
     assert(k == 5)
     assert(recorded.schema == inferred.schema)
     def rows(df: DataFrame) = df.collect().sortBy(_.getLong(0)).toSeq

@@ -900,6 +900,32 @@ class PlanSpec extends SparkSpec {
     } finally graft.ops.GraftMetrics.uninstall(spark, gm)
   }
 
+  test("JobStats: drained jobs, stages and tasks per phase; nothing " +
+      "counted after close") {
+    import graft.ops.{JobCounts, JobStats}
+    val sc = spark.sparkContext
+    def eightInFour(phase: String): Long = {
+      sc.setJobDescription(phase)
+      try sc.parallelize(1 to 8, 4).count()
+      finally sc.setJobDescription(null)
+    }
+    val stats = JobStats.install(spark)
+    try {
+      val c0 = stats.read()
+      eightInFour("p1")
+      assert(stats.read() - c0 == JobCounts(1, 1, 4, Map("p1" -> 1)))
+      eightInFour("p2")
+      val both = stats.read() - c0
+      assert(both == JobCounts(2, 2, 8, Map("p1" -> 1, "p2" -> 1)))
+      stats.close()
+      eightInFour("p3")
+      assert(stats.read() - c0 == both, "a job after close() was counted")
+    } finally stats.close()
+    val (n, c) = JobStats.during(spark)(eightInFour("p4"))
+    assert(n == 8L)
+    assert(c == JobCounts(1, 1, 4, Map("p4" -> 1)))
+  }
+
   test("ObservedGate: observe-metrics match independent aggregates and " +
       "add no extra job to the action") {
     // Dataset.observe computes named aggregates INSIDE the action's own
@@ -909,35 +935,20 @@ class PlanSpec extends SparkSpec {
     val df = Tables(spark, sf, "orders")
       .select(graft.ops.Relational.cents(
         org.apache.spark.sql.functions.col("o_totalprice")).as("cents"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val before = {
-        // baseline: the same action un-observed
-        df.write.format("noop").mode("overwrite").save()
-        org.apache.spark.sql.graftbridge.ListenerBridge
-          .drain(spark.sparkContext)
-        jobs.get()
-      }
-      val got = graft.ops.ObservedGate.run(df, "gate",
+    // warm-up: the same action un-observed
+    df.write.format("noop").mode("overwrite").save()
+    val (got, c) = graft.ops.JobStats.during(spark) {
+      graft.ops.ObservedGate.run(df, "gate",
         Seq(count(lit(1)).as("rows"), sum("cents").as("total_cents"))) {
         observed => observed.write.format("noop").mode("overwrite").save()
       }
-      org.apache.spark.sql.graftbridge.ListenerBridge
-        .drain(spark.sparkContext)
-      val observedJobs = jobs.get() - before
-      assert(observedJobs <= 2, // the noop write's own job(s), no extra scan
-        s"observe must not add a data pass: $observedJobs jobs")
-      val wantRows = df.count()
-      val wantSum = df.agg(sum("cents")).head().getLong(0)
-      assert(got("rows") == wantRows, s"got=$got want rows=$wantRows")
-      assert(got("total_cents") == wantSum, s"got=$got want=$wantSum")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    assert(c.jobs <= 2, // the noop write's own job(s), no extra scan
+      s"observe must not add a data pass: ${c.jobs} jobs")
+    val wantRows = df.count()
+    val wantSum = df.agg(sum("cents")).head().getLong(0)
+    assert(got("rows") == wantRows, s"got=$got want rows=$wantRows")
+    assert(got("total_cents") == wantSum, s"got=$got want=$wantSum")
   }
 
   test("native expressions stay inside whole-stage codegen spans") {
@@ -1128,8 +1139,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("rules-on ambient default (r15): applyQueryConfPolicy restores " +
-      "both rewrite confs after resetting the tuning confs; " +
-      "SPARK_GRAFT_RULES_ON=0 is the only harness kill switch") {
+      "both rewrite confs after resetting the tuning confs") {
     val tk = graft.plans.TopKRewrite.EnabledConf
     val rj = graft.plans.RangeJoinRewrite.EnabledConf
     try {
@@ -1137,11 +1147,6 @@ class PlanSpec extends SparkSpec {
       spark.conf.set(graft.plans.TopKRewrite.MaxKConf, "7")
       spark.conf.set(tk, "false")
       GraftSession.applyQueryConfPolicy(spark)
-      // environment guard FIRST: under SPARK_GRAFT_RULES_ON=0 the
-      // confs below are unset and conf.get would throw an opaque
-      // NoSuchElementException before this diagnostic (r15 review)
-      assert(GraftSession.rulesOnByDefault,
-        "test environment must not set SPARK_GRAFT_RULES_ON=0")
       // ambient default: both rules ON (the SOAK_r14-adjudicated
       // deployment posture), tuning confs back to defaults
       assert(spark.conf.get(tk) == "true")
@@ -1197,5 +1202,31 @@ class PlanSpec extends SparkSpec {
           s"${got -- allowed} — at corpus scale that is one executor " +
           "sorting the world; bound it or partition it")
     }
+  }
+
+  test("one job listener and four mains in src/main, no growth") {
+    // every job / stage / task count goes through ops.JobStats, and the
+    // main jar's entry points are Bench, Verify, StressMain and Profile,
+    // which all call the production operators — a hand-written listener
+    // or a dev main that copies a pipeline fails here
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val walk = java.nio.file.Files.walk(root)
+    val sources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => root.relativize(p).toString ->
+          java.nio.file.Files.readString(p)).toSeq
+      finally walk.close()
+    val listeners = sources.collect {
+      case (p, text) if text.contains("addSparkListener") => p
+    }
+    assert(listeners == Seq("graft/ops/Metrics.scala"))
+    val mains = sources.flatMap { case (p, text) =>
+      "def main\\(|extends App\\b".r.findAllIn(text)
+        .map(_ => p.stripSuffix(".scala"))
+    }
+    assert(mains.sorted ==
+      Seq("graft/Bench", "graft/Profile", "graft/StressMain", "graft/Verify"))
   }
 }

@@ -114,12 +114,12 @@ class WorkflowSpec extends SparkSpec {
     val cfg = mkFixtures(s"${Work.dir}/test_wf_jobs")
     BTP.runOnce(spark, cfg)
     val wf = new graft.workflow.Workflow(spark, cfg.workdir)
-    val jobs = new JobCounter
+    val jobs = graft.ops.JobStats.install(spark)
     // subscribed before build(): each handler runs before the job its
     // event starts, so the two reads bracket validate exactly
     var start, end = -1
-    wf.bus.subscribe(Events.ModelGenerated)(_ => start = jobs.read())
-    wf.bus.subscribe(Events.ModelValidated)(_ => end = jobs.read())
+    wf.bus.subscribe(Events.ModelGenerated)(_ => start = jobs.read().jobs)
+    wf.bus.subscribe(Events.ModelValidated)(_ => end = jobs.read().jobs)
     BTP.build(wf, cfg)
     val scratchBefore = validationScratch()
     try wf.run(Seq("datagen")) finally jobs.close()
