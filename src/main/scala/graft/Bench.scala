@@ -213,16 +213,18 @@ object Bench {
     // for dedup_ngram_jaccard was unexplainable from a medians-only
     // artifact). Each run records wall seconds, exact Spark job/stage/
     // task counts (ops.JobStats, which drains the listener bus before
-    // each read), cumulative JVM GC ms during the run, the run's
-    // start offset from bench start, and which suite pass it belongs
-    // to, so one stuck run, GC decay with session age, or a job-count
-    // blowup are distinguishable in the committed artifact.
+    // each read), cumulative JVM GC ms and codegen compile ms during
+    // the run, the run's start offset from bench start, and which
+    // suite pass it belongs to, so one stuck run, GC decay with session
+    // age, or a job-count blowup are distinguishable in the committed
+    // artifact.
     val jobStats = graft.ops.JobStats.install(spark)
     def gcMs(): Long =
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).sum
     final case class Run(sec: Double, jobs: Int, stages: Int, tasks: Int,
-        gcMs: Long, atSec: Double, pass: Int, suspect: Boolean)
+        gcMs: Long, codegenMs: Long, atSec: Double, pass: Int,
+        suspect: Boolean)
     val benchT0 = System.nanoTime()
     val keyList = SparkEntry.queries.toSeq.zipWithIndex
       .filter { case ((name, _), _) => only.forall(_.contains(name)) }
@@ -263,8 +265,8 @@ object Bench {
       GraftSession.dropAllCaches(spark)
       val c = jobStats.read() - c0
       if (ok) {
-        recs(name) += Run(sec, c.jobs, c.stages, c.tasks, gcMs() - g0, at,
-          pass, isSuspect(sec, ref.get(name)))
+        recs(name) += Run(sec, c.jobs, c.stages, c.tasks, gcMs() - g0,
+          c.compileMs, at, pass, isSuspect(sec, ref.get(name)))
         (): Unit
       }
     }
@@ -455,18 +457,22 @@ object Bench {
     //            tail lottery; round-6 verdict #2)
     //   line 2 — per-run detail: {"metric":"detail","queries":{name:
     //            {"median":s,"idx":i,"runs":[{"sec","jobs","stages",
-    //            "tasks","gc_ms","at","pass"(,"suspect":true)}…]}}} —
+    //            "tasks","gc_ms","codegen_ms","at","pass"
+    //            (,"suspect":true)}…]}}} —
     //            `idx` is the key order, `pass` the whole-suite pass the
     //            run belongs to (runs+1 = post-suite extra sample), `at`
     //            the run's start offset (sec) from bench start, `gc_ms`
-    //            the JVM GC time during the run, `suspect` present iff
+    //            the JVM GC time during the run, `codegen_ms` the
+    //            janino compile time (JobCounts.compileMs; 0 when every
+    //            generated class hit the cache), `suspect` present iff
     //            the run tripped isSuspect against the committed local
     //            median. This is the artifact that makes a 26 s outlier
     //            diagnosable: one slow run vs three, with or without a
     //            job-count/GC anomaly, early vs late in the session.
     def runJson(r: Run): String =
       s"""{"sec":${n3(r.sec)},"jobs":${r.jobs},"stages":${r.stages},""" +
-        s""""tasks":${r.tasks},"gc_ms":${r.gcMs},"at":${n3(r.atSec)},""" +
+        s""""tasks":${r.tasks},"gc_ms":${r.gcMs},""" +
+        s""""codegen_ms":${r.codegenMs},"at":${n3(r.atSec)},""" +
         s""""pass":${r.pass}""" +
         (if (r.suspect) ""","suspect":true""" else "") + "}"
     // ratio_vs_local (round-10 verdict #2): median ÷ committed local

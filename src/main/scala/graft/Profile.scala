@@ -2,7 +2,8 @@ package graft
 
 /** Per-key profiler: runs each named query key once, under Bench's
   * session, conf policy and timed action (a noop-sink write), and
-  * prints what the run cost — job / stage / task counts and wall time,
+  * prints what the run cost — job / stage / task counts, generated
+  * classes compiled and their compile time, and wall time,
   * the jobs of each phase ([[graft.ops.JobStats.phaseOf]]), then the
   * formatted plan between BEGIN/END markers.
   *
@@ -31,7 +32,8 @@ object Profile {
       val sec = (System.nanoTime() - t0) / 1e9
       val c = jobStats.read() - c0
       println(f"[profile] $k jobs=${c.jobs} stages=${c.stages} " +
-        f"tasks=${c.tasks} wall=$sec%.2f s")
+        f"tasks=${c.tasks} compiles=${c.compiles} " +
+        f"compile=${c.compileMs} ms wall=$sec%.2f s")
       c.phases.toSeq.sortBy { case (p, n) => (-n, p) }.foreach {
         case (p, n) => println(f"[profile] $n%4d  $p")
       }

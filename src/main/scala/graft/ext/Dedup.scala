@@ -404,6 +404,14 @@ object Dedup {
       shingleSets(plantedCorpus(Tables(s, dir, "documents")))),
     Some(jaccardOracleSql))
 
+  /** The one cap on the driver union-find shortcut of connected
+    * components: `spark.graft.cc.driverEdges` (default 1M, 0 disables).
+    * [[connectedComponents]] and the curate stream's in-batch CC both
+    * read it. */
+  private[graft] def driverCcEdges(s: SparkSession): Long =
+    s.conf.getOption("spark.graft.cc.driverEdges").map(_.toLong)
+      .getOrElse(1000000L)
+
   /** Connected components by min-label propagation WITH pointer
     * jumping: each round every node takes the min label among itself,
     * its neighbors' labels, and its label's label (path halving) —
@@ -417,14 +425,13 @@ object Dedup {
     * flat. Non-convergence within maxIter throws (partial labels would
     * silently keep wrong canonical docs downstream) unless
     * `strict = false`.
-    */
-  /** @param driverEdgeCap bounded-edge driver-shortcut cap: −1 (the
-    *   default) reads `spark.graft.cc.driverEdges` (default 1M, 0
-    *   disables); an explicit value overrides the conf — callers that
-    *   manage their OWN cap (the curate stream's
-    *   `spark.graft.curate.driverCcEdges`) pass 0 on their
-    *   past-the-cap branch so two confs never gate one collect
-    *   (r20 review #2). */
+    *
+    * @param driverEdgeCap bounded-edge driver-shortcut cap: −1 (the
+    *   default) reads [[driverCcEdges]]; an explicit value overrides
+    *   the conf — a caller that decides the shortcut itself from the
+    *   same conf (the curate stream, which already knows its pair
+    *   count) passes 0 on its past-the-cap branch so the known-large
+    *   edge set is not probed by a second collect (r20 review #2). */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 20, strict: Boolean = true,
       driverEdgeCap: Long = -1L): DataFrame = {
@@ -450,10 +457,7 @@ object Dedup {
     // spark.graft.cc.driverEdges: 0 disables (StressMain's CC growth
     // rows do, so they keep measuring the distributed path).
     val driverCap =
-      if (driverEdgeCap >= 0) driverEdgeCap
-      else spark.conf
-        .getOption("spark.graft.cc.driverEdges").map(_.toLong)
-        .getOrElse(1000000L)
+      if (driverEdgeCap >= 0) driverEdgeCap else driverCcEdges(spark)
     if (driverCap > 0 && driverCap < Int.MaxValue) {
       val probe = edges
         .select(col("a").cast("long"), col("b").cast("long"))
@@ -1155,24 +1159,43 @@ object Dedup {
     Work.publish(path)(stagePlainIndex(_, history)): Unit
   }
 
-  /** Shingle + MinHash-band a corpus batch and write the two plain
-    * parquet subtables into a staging dir — the shared ingest core of
-    * [[publishHistoryIndex]] and [[publishHistorySegment]]. */
+  /** The plain layout's `sh/` subtable, as [[stageShingledIndex]]
+    * writes it. Readers declare it rather than infer it: a schema-less
+    * parquet read runs one schema-inference Spark job per subtable. */
+  private[graft] val PlainShSchema =
+    StructType.fromDDL("doc_id BIGINT, shs ARRAY<BIGINT>, n INT")
+
+  /** The plain layout's `bb/` subtable (see [[PlainShSchema]]). */
+  private[graft] val PlainBbSchema =
+    StructType.fromDDL("doc_id BIGINT, band INT, bucket BIGINT")
+
   /** THE single writer of the plain (sh, bb, lshplan) segment layout
     * (r20 review: three call sites had each spelled it out — a future
-    * layout change must land exactly once). `sh` must be
+    * layout change must land exactly once), in the declared
+    * [[PlainShSchema]] / [[PlainBbSchema]]. `sh` must be
     * `shingleSets`-shaped and already cached by the caller. The
     * banding plan record travels WITH the segment (r19 verdict #7):
     * incremental probes validate it, so two sides never band
     * differently and silently lose recall. */
   private def stageShingledIndex(tmp: String, sh: DataFrame): Unit = {
-    val shc = sh.select(col("doc_id"), col("shs"), col("n"))
+    val shc = sh.select(col("doc_id").cast(LongType).as("doc_id"),
+      col("shs"), col("n"))
     shc.write.mode("overwrite").parquet(s"$tmp/sh")
     bandBuckets(minhashSignatures(shc)).write.mode("overwrite")
       .parquet(s"$tmp/bb")
     writeRecord(tmp, "lshplan", DefaultBandPlan.token)
   }
 
+  /** The (sh, bb) frames of plain-layout index dirs, one multi-path
+    * scan each, read by the declared schemas (no inference job). */
+  private def readPlainIndex(s: SparkSession,
+      dirs: Seq[String]): (DataFrame, DataFrame) =
+    (s.read.schema(PlainShSchema).parquet(dirs.map(p => s"$p/sh"): _*),
+      s.read.schema(PlainBbSchema).parquet(dirs.map(p => s"$p/bb"): _*))
+
+  /** Shingle + MinHash-band a corpus batch and write the two plain
+    * parquet subtables into a staging dir — the shared ingest core of
+    * [[publishHistoryIndex]] and [[publishHistorySegment]]. */
   private[graft] def stagePlainIndex(tmp: String, batch: DataFrame): Unit = {
     val sh = shingleSets(batch.select(col("doc_id"), col("text")))
       .persist()
@@ -1630,8 +1653,7 @@ object Dedup {
     val segs = activeSegments(indexDir)
     require(segs.nonEmpty,
       s"segmented history index at $indexDir has no complete segment")
-    (s.read.parquet(segs.map(p => s"$p/sh"): _*),
-      s.read.parquet(segs.map(p => s"$p/bb"): _*))
+    readPlainIndex(s, segs)
   }
 
   /** [[incrementalAgainstIndex]] over a segmented index: the increment
@@ -1727,8 +1749,7 @@ object Dedup {
     }
     val plain =
       if (plainSegs.isEmpty) Seq.empty
-      else Seq((s.read.parquet(plainSegs.map(p => s"$p/sh"): _*),
-        s.read.parquet(plainSegs.map(p => s"$p/bb"): _*)))
+      else Seq(readPlainIndex(s, plainSegs))
     plain ++ bucketedSegs.map(p => bucketedHistoryIndex(s, p))
   }
 
@@ -2077,17 +2098,16 @@ object Dedup {
           if (!useConcat) Seq.empty[String]
           else alignedAll.filterNot(aligned.toSet)
         val rest = chosen.filterNot((aligned ++ concatFrom).toSet)
-        val restSh =
-          if (rest.isEmpty) Seq.empty
-          else Seq((s.read.parquet(rest.map(p => s"$p/sh"): _*), false))
-        val restBb =
-          if (rest.isEmpty) Seq.empty
-          else Seq((s.read.parquet(rest.map(p => s"$p/bb"): _*), false))
+        val (restSh, restBb) =
+          if (rest.isEmpty) (Seq.empty, Seq.empty)
+          else {
+            val (sh, bb) = readPlainIndex(s, rest)
+            (Seq((sh, false)), Seq((bb, false)))
+          }
         stageBucketedIndexParts(s, tmp, HistIdxBuckets,
           restSh, restBb, linkFrom = aligned, concatFrom = concatFrom)
       } else {
-        val sh = s.read.parquet(chosen.map(p => s"$p/sh"): _*)
-        val bb = s.read.parquet(chosen.map(p => s"$p/bb"): _*)
+        val (sh, bb) = readPlainIndex(s, chosen)
         sh.write.mode("overwrite").parquet(s"$tmp/sh")
         bb.write.mode("overwrite").parquet(s"$tmp/bb")
       }
@@ -2567,11 +2587,10 @@ object Dedup {
     * semi-join per call that fails fast on overlap.
     */
   def incrementalAgainstIndex(s: SparkSession, indexPath: String,
-      increment: DataFrame): DataFrame =
-    incrementalAgainstFrames(s,
-      s.read.parquet(s"$indexPath/sh"),
-      s.read.parquet(s"$indexPath/bb"),
-      increment, indexPath)
+      increment: DataFrame): DataFrame = {
+    val (sh, bb) = readPlainIndex(s, Seq(indexPath))
+    incrementalAgainstFrames(s, sh, bb, increment, indexPath)
+  }
 
   /** Shared increment-vs-stored-index core: both the plain-parquet and
     * the bucketed index entry points bind it, differing only in how
@@ -2703,9 +2722,8 @@ object Dedup {
   def publishHistoryIndexBucketedFrom(s: SparkSession, path: String,
       plainIndexPath: String, buckets: Int = HistIdxBuckets): Unit = {
     Work.publish(path) { tmp =>
-      stageBucketedIndex(s, tmp, buckets,
-        s.read.parquet(s"$plainIndexPath/sh"),
-        s.read.parquet(s"$plainIndexPath/bb"))
+      val (sh, bb) = readPlainIndex(s, Seq(plainIndexPath))
+      stageBucketedIndex(s, tmp, buckets, sh, bb)
     }: Unit
   }
 

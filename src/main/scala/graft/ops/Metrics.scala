@@ -3,8 +3,10 @@ package graft.ops
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -97,10 +99,14 @@ object GraftMetrics {
 }
 
 /** Spark jobs, stages and tasks started on a session, in total and per
-  * phase. The phase is what a job's reader would call it: its
-  * `spark.job.description` when set, else its short call site. */
+  * phase, and the generated classes compiled meanwhile. The phase is
+  * what a job's reader would call it: its `spark.job.description` when
+  * set, else its short call site. `compiles` / `compileMs` are the
+  * JVM-wide janino compiles (driver and, in local mode, executor
+  * tasks) and their time; a compile that hits the codegen cache is not
+  * counted. */
 final case class JobCounts(jobs: Int, stages: Int, tasks: Int,
-    phases: Map[String, Int]) {
+    phases: Map[String, Int], compiles: Long = 0L, compileMs: Long = 0L) {
 
   /** The counts started since `before` (a read of the same listener);
     * phases without a new job are dropped. */
@@ -108,7 +114,8 @@ final case class JobCounts(jobs: Int, stages: Int, tasks: Int,
     JobCounts(jobs - before.jobs, stages - before.stages,
       tasks - before.tasks,
       phases.map { case (p, n) => p -> (n - before.phases.getOrElse(p, 0)) }
-        .filter(_._2 > 0))
+        .filter(_._2 > 0),
+      compiles - before.compiles, compileMs - before.compileMs)
 }
 
 /** THE job counter: the one `SparkListener` behind every job, stage and
@@ -132,6 +139,9 @@ final class JobStats private (spark: SparkSession) extends SparkListener {
   private val stages = new AtomicInteger
   private val tasks = new AtomicInteger
   private val byPhase = new ConcurrentHashMap[String, AtomicInteger]
+  private val compiled0 = JobStats.compiled()
+  // the compile counters are JVM-wide, so close() freezes them
+  @volatile private var compiledAtClose: Option[(Long, Long)] = None
 
   override def onJobStart(j: SparkListenerJobStart): Unit = {
     jobs.incrementAndGet(): Unit
@@ -144,8 +154,10 @@ final class JobStats private (spark: SparkSession) extends SparkListener {
   /** Everything counted since [[JobStats.install]]. */
   def read(): JobCounts = {
     org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+    val (compiles, compileNs) = compiledAtClose.getOrElse(JobStats.compiled())
     JobCounts(jobs.get, stages.get, tasks.get,
-      byPhase.asScala.map { case (p, n) => p -> n.get }.toMap)
+      byPhase.asScala.map { case (p, n) => p -> n.get }.toMap,
+      compiles - compiled0._1, (compileNs - compiled0._2) / 1000000L)
   }
 
   /** Stop counting. Drains first, so every job started before the call
@@ -153,6 +165,7 @@ final class JobStats private (spark: SparkSession) extends SparkListener {
   def close(): Unit = {
     org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
     spark.sparkContext.removeSparkListener(this)
+    if (compiledAtClose.isEmpty) compiledAtClose = Some(JobStats.compiled())
   }
 }
 
@@ -163,6 +176,12 @@ object JobStats {
     spark.sparkContext.addSparkListener(s)
     s
   }
+
+  /** Generated classes compiled in this JVM so far, and their total
+    * compile time in ns. */
+  private def compiled(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime)
 
   /** `body`'s value and the jobs it started. */
   def during[T](spark: SparkSession)(body: => T): (T, JobCounts) = {

@@ -846,10 +846,9 @@ object StreamingDedup {
     // overhead per batch): a bounded pair set union-finds on the
     // driver (one collect off the cache, exact same reject set), past
     // the cap the distributed CC runs as before. The cap bounds the
-    // collect, never the data.
-    val driverCcCap = s.conf
-      .getOption("spark.graft.curate.driverCcEdges").map(_.toLong)
-      .getOrElse(1000000L)
+    // collect, never the data; it is the shared CC cap
+    // (spark.graft.cc.driverEdges), so one conf gates every collect.
+    val driverCcCap = Dedup.driverCcEdges(s)
     val kept =
       if (nPairs == 0) fresh // every doc isolated ⇒ all canonical
       else if (nPairs <= driverCcCap) {
@@ -864,10 +863,10 @@ object StreamingDedup {
         }
       } else {
         // driverEdgeCap = 0: THIS branch is the past-the-cap fallback —
-        // the stream's own spark.graft.curate.driverCcEdges already
-        // decided against a driver collect, so the callee's independent
-        // conf-defaulted shortcut must not re-collect the (known-large)
-        // pair set (r20 review #2: two confs gating one mechanism)
+        // the pair count already decided against a driver collect
+        // under spark.graft.cc.driverEdges, so the callee must not
+        // probe the (known-large) pair set again with a collect of its
+        // own (r20 review #2)
         val labels = phase("in-batch CC")(Dedup.connectedComponents(
           fresh.select("doc_id"), pairs, driverEdgeCap = 0L))
         fresh.join(

@@ -1794,6 +1794,25 @@ class ExtSpec extends SparkSpec {
     Work.clean(bpath)
   }
 
+  test("plain index segments are read by their declared schemas: no " +
+      "schema-inference job, and the declared schemas are the written ones") {
+    val idx = Work.scratch("plainidx_schema_spec")
+    Work.clean(idx)
+    Dedup.publishHistorySegment(spark, idx, "d0",
+      Tables(spark, sf, "documents").limit(20).select("doc_id", "text"))
+    val (flavors, c) = graft.ops.JobStats.during(spark)(
+      Dedup.segmentedIndexFlavors(spark, idx))
+    assert(c.jobs == 0, s"index read started jobs: ${c.phases}")
+    val Seq((sh, bb)) = flavors
+    assert(sh.schema == Dedup.PlainShSchema)
+    assert(bb.schema == Dedup.PlainBbSchema)
+    // the writer's files infer to exactly the declared schemas
+    assert(spark.read.parquet(s"$idx/seg_d0/sh").schema == sh.schema)
+    assert(spark.read.parquet(s"$idx/seg_d0/bb").schema == bb.schema)
+    assert(sh.count() > 0 && bb.count() > 0)
+    Work.clean(idx)
+  }
+
   test("bucketed-index catalog economy: a clean+republish retires the " +
       "superseded publish id's table pair — exactly one declared pair " +
       "per subtable, ever (r16 verdict #6)") {

@@ -919,11 +919,22 @@ class PlanSpec extends SparkSpec {
       assert(both == JobCounts(2, 2, 8, Map("p1" -> 1, "p2" -> 1)))
       stats.close()
       eightInFour("p3")
-      assert(stats.read() - c0 == both, "a job after close() was counted")
+      spark.range(8).selectExpr("max(id * 6291469 - 3)").collect(): Unit
+      assert(stats.read() - c0 == both,
+        "a job or a compile after close() was counted")
     } finally stats.close()
     val (n, c) = JobStats.during(spark)(eightInFour("p4"))
     assert(n == 8L)
     assert(c == JobCounts(1, 1, 4, Map("p4" -> 1)))
+    // generated classes: a fresh expression shape compiles, the same
+    // shape again hits the codegen cache
+    def freshShape() =
+      spark.range(64).selectExpr("sum(id * 7340033 + 91) AS s").collect()
+    val (_, first) = JobStats.during(spark)(freshShape())
+    assert(first.compiles > 0, s"fresh shape compiled nothing: $first")
+    val (_, again) = JobStats.during(spark)(freshShape())
+    assert(again.compiles == 0 && again.compileMs == 0,
+      s"re-run recompiled: $again")
   }
 
   test("ObservedGate: observe-metrics match independent aggregates and " +

@@ -122,6 +122,36 @@ class StreamingSpec extends SparkSpec {
       s"clicks=$clicks rest=$rest total=$total")
   }
 
+  test("a second streaming query of the same shape compiles no class: " +
+      "every query shares the executor class loader, so the codegen " +
+      "cache hits across queries") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions._
+    val base = freshDir("codegenreuse")
+    val store = LogStore(base)
+    store.append(Tables(spark, sf, "events").limit(50), "scope", "s_cg")
+    def compilesDuringQuery(run: Int): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val q = store.readStream(spark, "scope", "s_cg", StreamOps.eventSchema)
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          batch.groupBy(col("event_type"))
+            .agg(sum(col("value") * 5279.0 + 17.0).as("v"))
+            .write.mode("overwrite").parquet(s"$base/out_$run")
+        }
+        .option("checkpointLocation", s"$base/ckpt_$run")
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compilesDuringQuery(1)
+    val second = compilesDuringQuery(2)
+    assert(first > 0, "the first query of a fresh shape compiled nothing")
+    assert(second == 0,
+      s"the second query recompiled $second classes the first compiled")
+    assert(spark.read.parquet(s"$base/out_2").count() > 0)
+  }
+
   test("batch and streaming appends to one stream are all visible (and compactable)") {
     val base = freshDir("mixedappend")
     val store = LogStore(base)
@@ -2369,13 +2399,13 @@ class StreamingSpec extends SparkSpec {
     // produce the identical kept set
     val idxD = freshDir("curatestream_idx_dist")
     val keptD = freshDir("curatestream_kept_dist")
-    spark.conf.set("spark.graft.curate.driverCcEdges", "0")
+    spark.conf.set("spark.graft.cc.driverEdges", "0")
     try {
       slices.zipWithIndex.foreach { case (sl, i) =>
         graft.streaming.StreamingDedup.curateFoldBatch(idxD, keptD)(
           sl.select("doc_id", "text"), i.toLong)
       }
-    } finally spark.conf.unset("spark.graft.curate.driverCcEdges")
+    } finally spark.conf.unset("spark.graft.cc.driverEdges")
     val gotD = spark.read.parquet(s"$keptD/batch_c*")
       .collect().map(_.getLong(0)).toSet
     assert(gotD == got,
